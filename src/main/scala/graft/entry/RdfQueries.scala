@@ -293,8 +293,8 @@ private[graft] object RdfQueries {
 
   /** Nested property path through the driver gate (round 6): a closure
     * over a GROUPED SEQUENCE — `(cust/nation)+` — exercises the
-    * recursive path compiler (PathTriple -> pair-relation evaluator),
-    * not the linear lowering. On this data the composed relation has no
+    * recursive path compiler (PathTriple -> pair-relation evaluator)
+    * rather than the BGP. On this data the composed relation has no
     * chains, so the closure equals one composition and the oracle states
     * the join closed-form. */
   private def q97_nested_path(s: SparkSession, dir: String): DataFrame =

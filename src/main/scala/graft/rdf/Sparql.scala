@@ -41,10 +41,12 @@ import org.apache.spark.sql.functions._
   *          | GRAPH term { group }
   *          | { group } UNION { group }
   *          | { SELECT ... }               (sub-select)
-  * triple  := term path term | term ('!' pterm | '!(' pterm ('|' pterm)* ')') term
-  * path    := step ('/' step)*
-  * step    := ['^'] (pterm | '(' pterm ('|' pterm)* ')') ['*'|'+'|'?'|'{n[,[m]]}']
-  * pterm   := <iri> | bareword | 'a' (→ rdf:type)
+  * triple  := term path term
+  * path    := seq ('|' seq)*
+  * seq     := elt ('/' elt)*
+  * elt     := ['^'] primary ['*'|'+'|'?'|'{n[,[m]]}']
+  * primary := pterm | '!' pterm | '!(' pterm ('|' pterm)* ')' | '(' path ')'
+  * pterm   := <iri> | bareword | 'a' (→ rdf:type) | ?var (plain triples only)
   * term    := ?var | <iri> | "literal" | bareword
   * object  := term ["^^"<dt> | "@"lang]     (typed/tagged literals)
   * key     := ?v | AGG(?v) | DESC(...) | ASC(...)   (several keys allowed)
@@ -162,17 +164,6 @@ object Sparql {
 
   private sealed trait Element
   private final case class Triple(s: String, p: String, o: String) extends Element
-  /** `s (p1|p2) o` — property alternation (one hop, any listed predicate). */
-  private final case class AltTriple(s: String, preds: List[String], o: String) extends Element
-  /** `s p* o` (mod='*'), `s p+ o` (mod='+'), `s p? o` (mod='?');
-    * `preds.size > 1` closes over the union of the edge relations
-    * (`(p1|p2)*`). */
-  private final case class StarPath(s: String, preds: List[String], o: String,
-      mod: Char = '*') extends Element
-  /** `s p{lo,hi} o` range quantifier (hi None = unbounded): the DISTINCT
-    * union of exact-k-hop pairs for k in [lo, hi]. */
-  private final case class QuantPath(s: String, preds: List[String], o: String,
-      lo: Int, hi: Option[Int]) extends Element
   private final case class Opt(group: List[Element]) extends Element
   private final case class FilterCond(e: Expr) extends Element
   private final case class Graphed(g: String, group: List[Element]) extends Element
@@ -182,9 +173,6 @@ object Sparql {
   private final case class Values(names: List[String],
       rows: List[List[String]]) extends Element
   private final case class SubSelect(query: Query) extends Element
-  /** `s !(p1|p2) o` — any predicate NOT in the set (SPARQL negated
-    * property set). */
-  private final case class NegPropSet(s: String, preds: List[String], o: String) extends Element
   /** FILTER EXISTS { group } / FILTER NOT EXISTS { group } — semi/anti
     * join of the current bindings against the inner group. `minus` marks
     * the MINUS form, whose no-shared-variable semantics differ (SPARQL
@@ -192,11 +180,9 @@ object Sparql {
     * MINUS removes nothing — NOT EXISTS would remove everything). */
   private final case class Exists(group: List[Element], negated: Boolean,
       minus: Boolean = false) extends Element
-  /** Fully-general property-path triple — the recursive grammar
-    * (SPARQL 1.1 §9.1): nested groups, sequence/alternation under
-    * modifiers, inverses of groups. Linear paths lower to the
-    * specialized elements above; only genuinely-nested shapes reach
-    * this node and its recursive pair-relation compiler. */
+  /** `s path o` for every path that is not a sequence of plain links
+    * (SPARQL 1.1 §9.1): alternations, modifiers, `{n,m}` ranges, negated
+    * sets, inverses of groups. Compiled by [[Sparql.pathPairs]]. */
   private final case class PathTriple(s: String, path: PathAst, o: String) extends Element
 
   /** Property-path AST (§9.1). */
@@ -404,44 +390,30 @@ object Sparql {
     private def fresh(): String = { freshId += 1; s"?__path$freshId" }
 
     /** Parse the triples after one subject: `s path o (, o)* (; path o...)*`
-      * A path step may be inverted (`^p`); a predicate position may be a
-      * negated property set (`!p` / `!(p1|p2)`). */
+      * with the recursive path grammar of the header (SPARQL 1.1 §9.1).
+      * Range quantifiers equivalent to a modifier normalize to it
+      * ({0,} = *, {1,} = +, {0,1} = ?, {1} = plain). A sequence of plain
+      * links chains BGP triples through fresh variables, so it joins in
+      * BGP order and carries object metadata; any other path is one
+      * [[PathTriple]]. */
     private def triples(elems: scala.collection.mutable.ListBuffer[Element]): Unit = {
       val s = term()
       var done = false
       while (!done) {
-        // full recursive property-path grammar (SPARQL 1.1 §9.1):
-        //   path    := seq ('|' seq)*
-        //   seq     := elt ('/' elt)*
-        //   elt     := ['^'] primary ['*'|'+'|'?'|'{n[,m]}']
-        //   primary := iri | 'a' | !set | '(' path ')'
-        // Range quantifiers equivalent to a modifier normalize to it
-        // ({0,} = *, {1,} = +, {0,1} = ?, {1} = plain).
         val ast = pathExpr()
+        val links = plainLinks(ast)
         var moreObjects = true
         while (moreObjects) {
           val o = objTerm()
-          (ast, lowerLinearPath(ast)) match {
-            case (PNeg(preds), _) => elems += NegPropSet(s, preds, o)
-            case (_, Some(steps)) =>
-              // linear chain: compile through the specialized elements —
-              // chain through fresh intermediate variables; each step is a
-              // plain/alternation triple or a closure, inverted in place
-              // (p1/^p2*/...) — `?s (^p)* ?o` ≡ `?o p* ?s`: closures and
-              // alternations swap endpoints too
+          links match {
+            case Some(ls) =>
               var subj = s
-              steps.zipWithIndex.foreach { case ((ps, inv, mod), i) =>
-                val obj = if (i == steps.size - 1) o else fresh()
-                val (from, to) = if (inv) (obj, subj) else (subj, obj)
-                elems += ((ps, mod) match {
-                  case (p :: Nil, Left(None)) => Triple(from, p, to)
-                  case (many, Left(None)) => AltTriple(from, many, to)
-                  case (many, Left(Some(m))) => StarPath(from, many, to, m)
-                  case (many, Right((lo, hi))) => QuantPath(from, many, to, lo, hi)
-                })
+              ls.zipWithIndex.foreach { case ((p, inv), i) =>
+                val obj = if (i == ls.size - 1) o else fresh()
+                elems += (if (inv) Triple(obj, p, subj) else Triple(subj, p, obj))
                 subj = obj
               }
-            case _ => elems += PathTriple(s, ast, o) // genuinely nested
+            case None => elems += PathTriple(s, ast, o)
           }
           moreObjects = peek == "," && { next(); true }
         }
@@ -500,6 +472,16 @@ object Sparql {
       var e = pathSeq()
       while (peek == "|") { next(); e = PAlt(e, pathSeq()) }
       e
+    }
+
+    /** The (predicate, inverted) links of a sequence of plain links — an
+      * IRI, `a` or a variable, optionally under `^` — or None for any
+      * other path. */
+    private def plainLinks(e: PathAst): Option[List[(String, Boolean)]] = e match {
+      case PLink(p) => Some(List((p, false)))
+      case PInv(PLink(p)) => Some(List((p, true)))
+      case PSeq(l, r) => for { a <- plainLinks(l); b <- plainLinks(r) } yield a ++ b
+      case _ => None
     }
 
     /** Consume a braced group WITHOUT parsing it — the nesting-aware raw
@@ -710,185 +692,76 @@ object Sparql {
     Bgp.Pattern(cv(t.s), cv(t.p), cv(t.o), g.map(termValue))
   }
 
-  /** Path-modifier pairs: `p*` = closure ∪ zero-length identity over every
-    * term of the (graph-scoped) store (SPARQL: a zero-length path matches
-    * each graph term with itself); `p+` = closure only; `p?` = direct
-    * edges ∪ identity. Closure via
-    * [[graft.graph.GraphOps.transitiveClosure]]. */
-  private def starPath(quads: DataFrame, sp: StarPath, graph: Option[String]): DataFrame = {
-    val scoped = graph.map(g => quads.where(col("g") === termValue(g))).getOrElse(quads)
-    val preds = sp.preds.map(termValue)
-    val edges = scoped.where(
-        if (preds.size == 1) col("p") === preds.head else col("p").isin(preds: _*))
-      .select(col("s").as("src"), col("o").as("dst"))
-    val reach =
-      if (sp.mod == '?') edges.distinct()
-      else graft.graph.GraphOps.transitiveClosure(edges).select(col("src"), col("dst"))
-    lazy val identity = scoped.select(col("s").as("src"))
-      .union(scoped.select(col("o").as("src")))
-      .distinct()
-      .select(col("src"), col("src").as("dst"))
-    val pairs =
-      if (sp.mod == '+') reach.distinct()
-      else reach.union(identity).distinct()
-    bindPathEnds(pairs, sp.s, sp.o)
-  }
-
-  /** Lower a path AST to the legacy linear step list when it IS linear —
-    * a top-level sequence whose elements are (possibly inverted, possibly
-    * modifier-wrapped) links or link-alternations. Nested shapes (groups
-    * under modifiers, inverses of sequences, alternations of sequences)
-    * return None and compile through [[pathPairs]]. */
-  private def lowerLinearPath(ast: PathAst)
-      : Option[List[(List[String], Boolean, Either[Option[Char], (Int, Option[Int])])]] = {
-    def altLinks(e: PathAst): Option[List[String]] = e match {
-      case PLink(p) => Some(List(p))
-      case PAlt(l, r) => for { a <- altLinks(l); b <- altLinks(r) } yield a ++ b
-      case _ => None
-    }
-    def base(e: PathAst): Option[(List[String], Boolean)] = e match {
-      case PInv(inner) => altLinks(inner).map((_, true))
-      case other => altLinks(other).map((_, false))
-    }
-    def step(e: PathAst)
-        : Option[(List[String], Boolean, Either[Option[Char], (Int, Option[Int])])] =
-      e match {
-        case PClosure(inner, m) => base(inner).map { case (ps, inv) => (ps, inv, Left(Some(m))) }
-        case PRangeP(inner, lo, hi) => base(inner).map { case (ps, inv) => (ps, inv, Right((lo, hi))) }
-        case other => base(other).map { case (ps, inv) => (ps, inv, Left(None)) }
-      }
-    def seqList(e: PathAst): List[PathAst] = e match {
-      case PSeq(l, r) => seqList(l) ++ seqList(r)
-      case other => List(other)
-    }
-    val steps = seqList(ast).map(step)
-    if (steps.forall(_.isDefined)) Some(steps.map(_.get)) else None
-  }
-
-  /** Recursive pair-relation compiler for nested property paths: every
-    * sub-path evaluates to a distinct (src, dst) relation; composition is
-    * an equi-join, alternation a union, closure the budgeted transitive
-    * closure, zero-length the node-identity relation over the scoped
-    * graph (SPARQL 1.1 §9.3). All operators stay relational — the same
-    * shuffles a hand-written join chain would plan. */
+  /** The (src, dst) pair relation of a property path over the
+    * (graph-scoped) store, per SPARQL 1.1 §18.4: links, negated sets,
+    * inverses, sequences (an equi-join) and alternations (a union) keep
+    * duplicates; `*`, `+`, `?` and `{n,m}` are sets. Closures run the
+    * budgeted [[graft.graph.GraphOps.transitiveClosure]]; the zero-length
+    * path matches every subject and object term with itself. An
+    * alternation of distinct links is one `isin` scan. */
   private def pathPairs(quads: DataFrame, ast: PathAst,
       graph: Option[String]): DataFrame = {
     val scoped = graph.map(g => quads.where(col("g") === termValue(g))).getOrElse(quads)
     lazy val identity = scoped.select(col("s").as("src"))
       .union(scoped.select(col("o").as("src"))).distinct()
       .select(col("src"), col("src").as("dst"))
+    def iri(p: String): String = {
+      require(!p.startsWith("?"), s"variable predicate $p inside a property path")
+      termValue(p)
+    }
+    def edges(keep: Column): DataFrame =
+      scoped.where(keep).select(col("s").as("src"), col("o").as("dst"))
+    def altLinks(e: PathAst): Option[List[String]] = e match {
+      case PLink(p) => Some(List(p))
+      case PAlt(l, r) => for { a <- altLinks(l); b <- altLinks(r) } yield a ++ b
+      case _ => None
+    }
+    def compose(l: DataFrame, r: DataFrame): DataFrame =
+      l.alias("a").join(r.alias("b"), col("a.dst") === col("b.src"))
+        .select(col("a.src").as("src"), col("b.dst").as("dst"))
+    def closure(pairs: DataFrame): DataFrame = graft.graph.GraphOps.transitiveClosure(pairs)
     def eval(e: PathAst): DataFrame = e match {
-      case PLink(p) => scoped.where(col("p") === termValue(p))
-        .select(col("s").as("src"), col("o").as("dst"))
-      case PNeg(preds) => scoped.where(!col("p").isin(preds.map(termValue): _*))
-        .select(col("s").as("src"), col("o").as("dst"))
+      case PLink(p) => edges(col("p") === iri(p))
+      case PNeg(preds) => edges(!col("p").isin(preds.map(iri): _*))
       case PInv(x) => eval(x).select(col("dst").as("src"), col("src").as("dst"))
-      case PAlt(l, r) => eval(l).unionByName(eval(r)).distinct()
-      case PSeq(l, r) =>
-        eval(l).alias("a").join(eval(r).alias("b"), col("a.dst") === col("b.src"))
-          .select(col("a.src").as("src"), col("b.dst").as("dst")).distinct()
-      case PClosure(x, '+') =>
-        graft.graph.GraphOps.transitiveClosure(eval(x).distinct())
-          .select(col("src"), col("dst")).distinct()
-      case PClosure(x, '*') =>
-        graft.graph.GraphOps.transitiveClosure(eval(x).distinct())
-          .select(col("src"), col("dst")).union(identity).distinct()
-      case PClosure(x, _) => // '?'
-        eval(x).union(identity).distinct()
+      case PAlt(l, r) => altLinks(e) match {
+        case Some(ps) if ps.distinct.size == ps.size => edges(col("p").isin(ps.map(iri): _*))
+        case _ => eval(l).unionByName(eval(r))
+      }
+      case PSeq(l, r) => compose(eval(l), eval(r))
+      case PClosure(x, '+') => closure(eval(x))
+      case PClosure(x, '*') => closure(eval(x)).union(identity).distinct()
+      case PClosure(x, _) => eval(x).union(identity).distinct() // '?'
       case PRangeP(x, lo, hi) =>
-        val edges = eval(x).distinct()
-        def step(acc: DataFrame): DataFrame = acc.alias("a")
-          .join(edges.alias("e"), col("a.dst") === col("e.src"))
-          .select(col("a.src").as("src"), col("e.dst").as("dst")).distinct()
-        val levels = scala.collection.mutable.ListBuffer[DataFrame]()
-        var cur = edges
-        var k = 1
-        while (k < lo) { cur = step(cur); k += 1 }
-        hi match {
-          case Some(h) =>
-            levels += cur
-            while (k < h) { cur = step(cur); k += 1; levels += cur }
-          case None =>
-            val closure = graft.graph.GraphOps.transitiveClosure(edges)
-              .select(col("src"), col("dst"))
-            levels += cur
-            levels += cur.alias("a")
-              .join(closure.alias("c"), col("a.dst") === col("c.src"))
-              .select(col("a.src").as("src"), col("c.dst").as("dst"))
+        // the union of exact-k-hop pairs for k in [lo, hi]: one join per
+        // level up to hi, or the closure past lo when hi is unbounded
+        // (lo >= 2 then: {0,}, {1,}, {0,1} and {1} normalize at parse)
+        val step = eval(x).distinct()
+        var cur = step
+        for (_ <- 2 to lo) cur = compose(cur, step).distinct()
+        val levels = hi match {
+          case Some(h) => Iterator.iterate(cur)(compose(_, step).distinct())
+            .take(h - math.max(lo, 1) + 1).toList
+          case None => List(cur, compose(cur, closure(step)))
         }
-        val base = levels.reduceLeft(_ union _)
-        (if (lo > 0) base else base.union(identity)).distinct()
+        val pairs = levels.reduceLeft(_ union _)
+        (if (lo > 0) pairs else pairs.union(identity)).distinct()
     }
     eval(ast)
   }
 
+  /** Bind a pair relation's ends to the triple's terms: a constant end
+    * filters, a variable end is projected, and the same variable at both
+    * ends keeps only the pairs with src = dst. */
   private def bindPathEnds(pairs: DataFrame, s: String, o: String): DataFrame = {
-    val withS =
-      if (s.startsWith("?")) pairs.withColumnRenamed("src", s.drop(1))
-      else pairs.where(col("src") === termValue(s)).drop("src")
-    if (o.startsWith("?")) withS.withColumnRenamed("dst", o.drop(1))
-    else withS.where(col("dst") === termValue(o)).drop("dst")
-  }
-
-  /** `s p{lo,hi} o`: distinct union of exact-k-hop pairs, k in [lo, hi].
-    * Bounded ranges iterate a join per level (hi is a small constant in
-    * any real query — each level is one hash join Catalyst plans like any
-    * other); unbounded tails reuse the budgeted transitive closure.
-    * Normalized forms ({0,}, {1,}, {0,1}, {1}) never reach here. */
-  private def quantPath(quads: DataFrame, qp: QuantPath, graph: Option[String]): DataFrame = {
-    val scoped = graph.map(g => quads.where(col("g") === termValue(g))).getOrElse(quads)
-    val preds = qp.preds.map(termValue)
-    val edges = scoped.where(
-        if (preds.size == 1) col("p") === preds.head else col("p").isin(preds: _*))
-      .select(col("s").as("src"), col("o").as("dst")).distinct()
-    def step(acc: DataFrame): DataFrame = acc.alias("a")
-      .join(edges.alias("e"), col("a.dst") === col("e.src"))
-      .select(col("a.src").as("src"), col("e.dst").as("dst")).distinct()
-    val levels = scala.collection.mutable.ListBuffer[DataFrame]()
-    var cur = edges
-    var k = 1
-    while (k < qp.lo) { cur = step(cur); k += 1 } // cur = exact-max(lo,1) hops
-    qp.hi match {
-      case Some(h) =>
-        levels += cur
-        while (k < h) { cur = step(cur); k += 1; levels += cur }
-      case None =>
-        // lo >= 2 here: exact-lo hops, plus lo..infinity via the closure
-        val closure = graft.graph.GraphOps.transitiveClosure(edges)
-          .select(col("src"), col("dst"))
-        levels += cur
-        levels += cur.alias("a")
-          .join(closure.alias("c"), col("a.dst") === col("c.src"))
-          .select(col("a.src").as("src"), col("c.dst").as("dst"))
+    val ends = Seq(s -> "src", o -> "dst")
+    val bound = ends.filterNot(_._1.startsWith("?")).foldLeft(pairs) {
+      case (df, (t, c)) => df.where(col(c) === termValue(t))
     }
-    val base = levels.reduceLeft(_ union _)
-    val withZero = // lo == 0: the zero-length path matches each term with itself
-      if (qp.lo > 0) base
-      else base.union(scoped.select(col("s").as("src"))
-        .union(scoped.select(col("o").as("src"))).distinct()
-        .select(col("src"), col("src").as("dst")))
-    bindPathEnds(withZero.distinct(), qp.s, qp.o)
-  }
-
-  /** `s (p1|p2) o` / `s !(p1|p2) o`: a filtered scan over (or excluding)
-    * the listed predicates — the predicate set pushes down to the
-    * columnar store like any constant. */
-  private def predSetScan(quads: DataFrame, s: String, preds: List[String],
-      o: String, graph: Option[String], negated: Boolean): DataFrame = {
-    val scoped = graph.map(g => quads.where(col("g") === termValue(g))).getOrElse(quads)
-    val in = col("p").isin(preds.map(termValue): _*)
-    val base = scoped.where(if (negated) !in else in)
-    val withS = if (s.startsWith("?")) base else base.where(col("s") === termValue(s))
-    val withO = if (o.startsWith("?")) withS else withS.where(col("o") === termValue(o))
-    val selfEq = if (s.startsWith("?") && s == o) withO.where(col("s") === col("o")) else withO
-    val projections = Seq(s -> "s", o -> "o")
-      .collect { case (t, c) if t.startsWith("?") => (t.drop(1), c) }
-      .foldLeft(Vector.empty[(String, String)]) { (acc, p) =>
-        if (acc.exists(_._1 == p._1)) acc else acc :+ p
-      }
-      .map { case (v, c) => col(c).as(v) }
-    require(projections.nonEmpty, "property set pattern binds no variables")
-    selfEq.select(projections: _*)
+    val sameVar = s.startsWith("?") && s == o
+    val vars = ends.collect { case (t, c) if t.startsWith("?") => (t.drop(1), c) }.distinctBy(_._1)
+    (if (sameVar) bound.where(col("src") === col("dst")) else bound)
+      .select(vars.map { case (v, c) => col(c).as(v) }: _*)
   }
 
   /** `namedQuads` is the store GRAPH-scoped patterns see — it differs
@@ -928,11 +801,7 @@ object Sparql {
       join(Bgp.bgpMeta(quads,
         triples.map(t => toPattern(t.asInstanceOf[Triple], graph)), metaVars))
     rest.foreach {
-      case sp: StarPath => join(starPath(quads, sp, graph))
-      case qp: QuantPath => join(quantPath(quads, qp, graph))
-      case pt: PathTriple => join(bindPathEnds(pathPairs(quads, pt.path, graph), pt.s, pt.o))
-      case AltTriple(s, preds, o) => join(predSetScan(quads, s, preds, o, graph, negated = false))
-      case NegPropSet(s, preds, o) => join(predSetScan(quads, s, preds, o, graph, negated = true))
+      case PathTriple(s, path, o) => join(bindPathEnds(pathPairs(quads, path, graph), s, o))
       case Exists(inner, negated, minus) =>
         val left = current.getOrElse(sys.error("FILTER EXISTS without preceding bindings"))
         val right = compileGroup(quads, inner, graph, metaVars, named)

@@ -58,15 +58,17 @@ object Ann {
     * (guide §1.2 "per-task work").
     *
     * Fast path: with y = |raw|·1e9 and t = y + 0.5, the accumulated
-    * double error versus the exact decimal value is < 2e-7 (one
-    * multiplication and one addition at magnitude ≤ ~1e9), so whenever
+    * double error versus the exact decimal value (the decimal form of
+    * raw, one multiplication, one addition) is at most ~2 ulp(t), and the
+    * guard t < 1e11 (|raw| < 100) keeps ulp(t) ≤ 2⁻¹⁶ ≈ 1.5e-5, so whenever
     * t sits ≥ 1e-4 away from an integer, n = ⌊t⌋ is provably the exact
     * HALF_UP digit and n / 1e9 — an exact-operand IEEE division (both n
     * and 1e9 are exactly representable) — is the correctly-rounded
     * double of n·10⁻⁹, the same value BigDecimal's toDouble returns.
-    * Boundary-proximate values (~0.02% of uniform inputs) take the
-    * original BigDecimal path. Sign is split out first; HALF_UP is
-    * symmetric (away from zero), so rounding the magnitude is identical.
+    * Boundary-proximate values (~0.02% of uniform inputs) and larger
+    * magnitudes take the original BigDecimal path. Sign is split out
+    * first; HALF_UP is symmetric (away from zero), so rounding the
+    * magnitude is identical.
     * Equality with the reference is spec-pinned across random sweeps and
     * adversarial boundary values (Round9Spec). */
   @inline private[similarity] def round9(raw: Double): Double = {
@@ -75,7 +77,7 @@ object Ann {
     val t = a * 1e9 + 0.5
     val n = math.floor(t)
     val d = t - n
-    if (d > 1e-4 && d < 1 - 1e-4 && t < 4.5e15) {
+    if (d > 1e-4 && d < 1 - 1e-4 && t < 1e11) {
       val r = n / 1e9
       // BigDecimal has no negative zero: a negative value rounding to
       // zero must come back as +0.0, not -0.0

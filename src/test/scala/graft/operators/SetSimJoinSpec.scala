@@ -142,10 +142,15 @@ class SetSimJoinSpec extends SparkSpec {
     val vocab = (0 until 60).map(i => s"w$i").toList
     val docs = (0L until 60L).map { id =>
       (id, rnd.shuffle(vocab).take(1 + rnd.nextInt(12)))
-    }
+    } ++ Seq(
+      // a null token element, which both builds must drop
+      (60L, List("w1", null, "w2")),
+      // U+FFFD and U+1F600 tie on df: their UTF-8 bytes order them
+      // EF.. < F0.., their UTF-16 code units the other way round
+      (61L, List("\uFFFD", "\uD83D\uDE00", "w3")),
+      (62L, List("\uD83D\uDE00", "\uFFFD")))
     val df = docs.toDF("id", "toks")
-    val recs = df.select(col("id"), col("toks"))
-      .where(org.apache.spark.sql.functions.size(col("toks")) > 0)
+    val recs = SetSimJoin.tokenRecords(df, "id", "toks")
     def ranks(sorted: DataFrame): Map[Long, Seq[Long]] = {
       val rows = sorted.select(col("id"), col("tids"))
         .as[(Long, Seq[Long])].collect()

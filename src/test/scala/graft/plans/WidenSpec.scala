@@ -20,11 +20,14 @@ class WidenSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       body
-      // listener delivery is async; a short quiesce is enough for the
-      // zero-jobs assertions here (a started job posts within ms)
-      Thread.sleep(300)
+      // listener delivery is async: drain every event posted by `body`
+      org.apache.spark.ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     count.get()
+  }
+
+  "jobsDuring" should "count the jobs its body runs" in {
+    assert(jobsDuring { spark.range(100).count() } > 0)
   }
 
   "Widen" should "not trigger any job for a post-shuffle input" in {

@@ -278,6 +278,13 @@ class SparqlFuzzSpec extends SparkSpec {
         val got = Sparql.select(quads, q).collect()
           .map(r => (r.getString(0), r.getString(1))).toSet
         withClue(clue) { got shouldBe want }
+        // the same variable at both ends: the nodes the path returns to
+        val self = Sparql.select(quads,
+          s"SELECT DISTINCT ?a WHERE { ?a ${renderPath(p)} ?a . }")
+          .collect().map(_.getString(0)).toSet
+        withClue(s"?a path ?a; $clue") {
+          self shouldBe want.collect { case (a, b) if a == b => a }
+        }
       }
     }
   }

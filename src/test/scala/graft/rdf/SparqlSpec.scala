@@ -802,11 +802,45 @@ class SparqlSpec extends SparkSpec {
     q("(<p>/<q>)?") shouldBe Set("a", "b")
   }
 
-  it should "still lower linear paths to the specialized plan shapes" in {
-    // sanity: the reference guard shape keeps parsing and answering
+  it should "answer a closure-then-link sequence" in {
+    // the reference guard shape
     Sparql.select(quads,
       """SELECT ?x WHERE { ?x <knows>*/<name> ?n . FILTER(?n = "Bob") }""")
       .as[String].collect().toSet shouldBe Set("alice", "bob")
+  }
+
+  "property path ends" should "bind the same variable at both ends of any path" in {
+    // p: a->b, c->c, d->e; q: b->a — p/q closes the cycle a->b->a
+    val g = Seq(("a", "p", "b"), ("c", "p", "c"), ("d", "p", "e"), ("b", "q", "a"))
+      .map { case (s, p, o) => (s, p, o, 2.toByte, null: String, null: String, "g") }
+      .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g")
+    def q(path: String) = {
+      val df = Sparql.select(g, s"SELECT ?x WHERE { ?x $path ?x }")
+      df.columns.toSeq shouldBe Seq("x")
+      df.as[String].collect().toSet
+    }
+    q("<p>*") shouldBe Set("a", "b", "c", "d", "e") // zero-length: every term
+    q("<p>+") shouldBe Set("c")
+    q("(<p>/<q>)+") shouldBe Set("a")
+    q("(<p>|<q>)") shouldBe Set("c")
+    q("!<q>") shouldBe Set("c")
+  }
+
+  it should "keep sequence duplicates whether or not the path is inverted (18.4)" in {
+    // a reaches d through b and through c: the sequence p/q yields (a,d) twice
+    val g = Seq(("a", "p", "b"), ("a", "p", "c"), ("b", "q", "d"), ("c", "q", "d"))
+      .map { case (s, p, o) => (s, p, o, 2.toByte, null: String, null: String, "g") }
+      .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g")
+    def q(pattern: String) = Sparql.select(g, s"SELECT ?s ?o WHERE { $pattern }")
+      .as[(String, String)].collect().toSeq.sorted
+    q("?s <p>/<q> ?o") shouldBe Seq(("a", "d"), ("a", "d"))
+    q("?o ^(<p>/<q>) ?s") shouldBe q("?s <p>/<q> ?o")
+    q("?s (<p>/<q>)|<x> ?o") shouldBe q("?s <p>/<q> ?o")
+  }
+
+  it should "reject a variable predicate inside a property path" in {
+    an[IllegalArgumentException] should be thrownBy
+      Sparql.select(quads, "SELECT ?x ?y WHERE { ?x ?p* ?y }")
   }
 
   "path quantifiers" should "expand {n}, {n,m} and {n,} structurally" in {

@@ -29,6 +29,12 @@ class Round9Spec extends AnyFlatSpec with Matchers {
       // similarity range with margin, both signs
       check(rnd.nextDouble() * 2.2 - 1.1)
     }
+    // |raw| from 1e3 to 1e6, log-uniform: one ulp of raw·1e9 there
+    // exceeds the 1e-4 boundary band, so only the BigDecimal path is exact
+    (1 to 100000).foreach { _ =>
+      val v = math.pow(10, 3 + 3 * rnd.nextDouble())
+      Seq(v, -v, math.rint(v * 1e9) / 1e9, (math.floor(v * 1e9) + 0.5) / 1e9).foreach(check)
+    }
   }
 
   it should "match on exact multiples of 1e-9 and their neighbors" in {
